@@ -1813,9 +1813,11 @@ def gopher_metrics(docs: DataFrame, *carry: str) -> DataFrame:
     )
     stop_expr = "CAST(0 AS BIGINT)"
     for lang, words in STOPWORDS.items():
-        # raw SQL string literals: only quote-free words are renderable
-        # (the ADVICE-r12 identifier-guard discipline)
-        assert "'" not in lang and all("'" not in w for w in words)
+        # raw SQL string literals: a quote would end the literal and a
+        # backslash is escape-processed, so neither is renderable
+        bad = [s for s in (lang, *words) if "'" in s or "\\" in s]
+        if bad:
+            raise ValueError(f"stopword or language not renderable as a SQL literal: {bad}")
         arr = "array(" + ",".join(f"'{w}'" for w in words) + ")"
         stop_expr = (
             f"CASE WHEN lang = '{lang}' THEN "

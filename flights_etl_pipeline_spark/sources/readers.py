@@ -80,11 +80,12 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hadoop_path))
 
 
-def high_watermark(df: DataFrame, column: str):
-    """S2/G1: max(column) scalar for incremental resume
+def high_watermark(df: DataFrame, column: str) -> tuple[object, int]:
+    """S2/G1: ``(max(column), row count)`` for incremental resume
     (ingestToBronze.py:59-66). The one sanctioned driver-side collect:
-    a single aggregated row."""
-    return df.agg(F.max(column).alias("wm")).collect()[0]["wm"]
+    a single aggregated row, so the count rides on the same job."""
+    wm, rows = df.agg(F.max(column), F.count(F.lit(1))).collect()[0]
+    return wm, rows
 
 
 def read_json_table(

@@ -26,7 +26,8 @@ def write_partitioned_parquet(
     max_records_per_file: int = 5_000_000,
 ) -> None:
     """S4: hive-layout partitioned parquet write
-    (ingestToBronze.py:84; transformToSilver.py:118)."""
+    (ingestToBronze.py:84; transformToSilver.py:118); with no
+    ``partition_cols``, a plain parquet directory."""
     (
         df.write.partitionBy(*partition_cols)
         .option("maxRecordsPerFile", str(max_records_per_file))
@@ -163,38 +164,6 @@ def compact_parquet_dir(
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
     return before, _count_files(path)
-
-
-def write_with_metrics(
-    df: DataFrame,
-    path: str,
-    count_col: str | None = None,
-    mode: str = "overwrite",
-) -> dict[str, int]:
-    """Write ``df`` to parquet while collecting data-quality metrics in
-    the SAME pass via ``DataFrame.observe`` — row count plus (optionally)
-    the null count of one column.
-
-    This is the production pattern for pipeline observability at 100 TB:
-    a naive ``df.count(); df.write...`` scans the data twice; ``observe``
-    attaches accumulator-style aggregates to the write job itself, so
-    quality counters are free. Metrics are exact (not sampled) and
-    aggregate on the executors; only the final scalar crosses to the
-    driver.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if count_col is not None:
-        aggs.append(
-            F.sum(
-                F.when(F.col(count_col).isNull(), 1).otherwise(0)
-            ).alias("n_nulls")
-        )
-    obs = Observation()
-    df.observe(obs, *aggs).write.mode(mode).parquet(path)
-    return {k: int(v) for k, v in obs.get.items()}
 
 
 def retention_delete(

@@ -16,13 +16,16 @@ import string
 
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from flights_etl_pipeline_spark.plans import queries_text
 from flights_etl_pipeline_spark.plans.queries_text import (
     _GOPHER_MIN_WORDS,
     gopher_gate,
     gopher_gate_sql,
+    gopher_metrics,
 )
 
 _SETTINGS = dict(
@@ -130,3 +133,22 @@ _doc = st.lists(_word, min_size=0, max_size=80).map(" ".join)
 @given(st.lists(_doc, min_size=1, max_size=12))
 def test_gopher_gate_random_ascii_matches_duckdb(spark, docs):
     _compare(spark, docs)
+
+
+@pytest.mark.parametrize(
+    "stopwords",
+    [
+        {"en": ["the", "o'clock"]},
+        {"en": ["the", "back\\slash"]},
+        {"e\\n": ["the", "of"]},
+    ],
+    ids=["quote-in-word", "backslash-in-word", "backslash-in-lang"],
+)
+def test_gopher_metrics_rejects_unrenderable_stopwords(spark, monkeypatch, stopwords):
+    """Stopwords and language names are rendered as SQL string literals: a
+    quote would end the literal and a backslash would be escape-processed,
+    so either raises instead of silently changing the metric."""
+    monkeypatch.setattr(queries_text, "STOPWORDS", stopwords)
+    docs = spark.createDataFrame([("the of", "en")], "text string, lang string")
+    with pytest.raises(ValueError, match="SQL literal"):
+        gopher_metrics(docs)

@@ -4,11 +4,14 @@ Expected values come from an *independent* DuckDB implementation of the
 intended semantics (SURVEY.md section 2.10 -- intent, not the reference's
 bugs), never from the code under test. Also asserts idempotence: a second
 run with the same source must not change bronze (watermark) or the dims
-(left-anti incremental).
+(left-anti incremental), that every ``PipelineResult`` count matches the
+lake and the oracle across full, delta, replayed and empty calls, and how
+many Spark jobs a call launches.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import math
 
@@ -20,14 +23,20 @@ from tests.flights_fixture import make_flights
 
 AS_OF = dt.date(2022, 12, 31)
 
+# PipelineResult field -> its table under the lake root
+TABLES = {
+    "bronze_rows": "bronze/flights",
+    "silver_rows": "silver/flights",
+    "gold_revenue_rows": "gold/revenue_n_seat_remain_ym",
+    "gold_fbc_rows": "gold/fbc_travel_duration_relation",
+    "dim_date_rows": "warehouse/dim_date",
+    "dim_airline_rows": "warehouse/dim_airline",
+    "dim_airport_rows": "warehouse/dim_airport",
+    "fact_rows": "warehouse/fact_flight_activities",
+}
 
-@pytest.fixture(scope="module")
-def raw_pdf():
-    return make_flights(n=1500, seed=42)
 
-
-@pytest.fixture(scope="module")
-def oracle(raw_pdf):
+def _oracle(raw_pdf) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.register("raw", raw_pdf)
     con.sql(
@@ -43,6 +52,51 @@ def oracle(raw_pdf):
         """
     )
     return con
+
+
+def _oracle_counts(con: duckdb.DuckDBPyConnection) -> dict[str, int]:
+    """Every ``PipelineResult`` field, computed in DuckDB."""
+    sql = {
+        "bronze_rows": "SELECT COUNT(*) FROM raw",
+        "silver_rows": "SELECT COUNT(*) FROM silver_o",
+        "gold_revenue_rows": f"""
+            SELECT COUNT(*) FROM (
+              SELECT 1 FROM silver_o
+              WHERE LEN(LIST_DISTINCT(codes)) = 1
+                AND flightD < DATE '{AS_OF.isoformat()}' + INTERVAL 1 DAY
+              GROUP BY YEAR(flightD), MONTH(flightD), codes[1])
+            """,
+        "gold_fbc_rows": """
+            SELECT COUNT(*) FROM (SELECT 1 FROM silver_o GROUP BY TRIM(fareBasisCode))
+            """,
+        "dim_date_rows": """
+            SELECT COUNT(DISTINCT d) FROM (SELECT UNNEST([searchD, flightD]) AS d FROM silver_o)
+            """,
+        "dim_airline_rows": """
+            SELECT COUNT(*) FROM (
+              SELECT DISTINCT UNNEST(codes) AS c, UNNEST(names) AS n FROM silver_o)
+            """,
+        "dim_airport_rows": """
+            SELECT COUNT(DISTINCT a) FROM (
+              SELECT UNNEST(string_split(segmentsArrivalAirportCode, '||')) AS a
+              FROM silver_o
+              UNION ALL
+              SELECT UNNEST(string_split(segmentsDepartureAirportCode, '||'))
+              FROM silver_o)
+            """,
+        "fact_rows": "SELECT COUNT(*) FROM silver_o",
+    }
+    return {k: con.sql(q).fetchone()[0] for k, q in sql.items()}
+
+
+@pytest.fixture(scope="module")
+def raw_pdf():
+    return make_flights(n=1500, seed=42)
+
+
+@pytest.fixture(scope="module")
+def oracle(raw_pdf):
+    return _oracle(raw_pdf)
 
 
 @pytest.fixture(scope="module")
@@ -122,28 +176,10 @@ def test_fbc_gold_matches_oracle(result, oracle, spark):
 
 def test_dims_match_oracle(result, oracle):
     res, _, _ = result
-    want_dates = oracle.sql(
-        "SELECT COUNT(DISTINCT d) FROM (SELECT UNNEST([searchD, flightD]) AS d FROM silver_o)"
-    ).fetchone()[0]
-    want_airlines = oracle.sql(
-        """
-        SELECT COUNT(*) FROM (
-          SELECT DISTINCT UNNEST(codes) AS c, UNNEST(names) AS n FROM silver_o)
-        """
-    ).fetchone()[0]
-    want_airports = oracle.sql(
-        """
-        SELECT COUNT(DISTINCT a) FROM (
-          SELECT UNNEST(string_split(segmentsArrivalAirportCode, '||')) AS a
-          FROM silver_o
-          UNION ALL
-          SELECT UNNEST(string_split(segmentsDepartureAirportCode, '||'))
-          FROM silver_o)
-        """
-    ).fetchone()[0]
-    assert res.dim_date_rows == want_dates
-    assert res.dim_airline_rows == want_airlines
-    assert res.dim_airport_rows == want_airports
+    want = _oracle_counts(oracle)
+    assert res.dim_date_rows == want["dim_date_rows"]
+    assert res.dim_airline_rows == want["dim_airline_rows"]
+    assert res.dim_airport_rows == want["dim_airport_rows"]
 
 
 def test_fact_has_count_segments(result, spark):
@@ -165,6 +201,72 @@ def test_second_run_is_idempotent(result, spark):
     assert res2.dim_airline_rows == res1.dim_airline_rows
     assert res2.dim_airport_rows == res1.dim_airport_rows
     assert res2.fact_rows == res1.fact_rows
+
+
+@pytest.fixture(scope="module")
+def days_pdf():
+    """The fixture ordered by search date with ``index`` reassigned in that
+    order, so the last search day is a one-day delta past the watermark of
+    the days before it."""
+    pdf = make_flights(n=1200, seed=7).sort_values("searchDate", kind="stable")
+    pdf["index"] = range(len(pdf))
+    return pdf.reset_index(drop=True)
+
+
+def _split_last_day(pdf):
+    last = pdf["searchDate"] == pdf["searchDate"].max()
+    return pdf[~last], pdf[last]
+
+
+def test_counts_match_lake_and_oracle_across_calls(spark, days_pdf, tmp_path):
+    """Full load, one-day delta, the delta replayed, then an empty source:
+    after every call each ``PipelineResult`` field, counted by the write
+    jobs and the watermark probe, equals a re-read of its table and the
+    DuckDB oracle over the rows landed so far. The replay and the empty
+    source write zero rows, so their observed counts must read 0 without
+    raising."""
+    base, delta = _split_last_day(days_pdf)
+    assert len(delta) > 0
+    lake = str(tmp_path / "lake")
+    full = spark.createDataFrame(base)
+    calls = [
+        ("full", full, base),
+        ("delta", spark.createDataFrame(delta), days_pdf),
+        ("replay", spark.createDataFrame(delta), days_pdf),
+        ("empty", spark.createDataFrame([], full.schema), days_pdf),
+    ]
+    for label, source, landed in calls:
+        got = dataclasses.asdict(run_pipeline(spark, source, lake, AS_OF))
+        on_lake = {k: spark.read.parquet(f"{lake}/{t}").count() for k, t in TABLES.items()}
+        assert got == on_lake, label
+        assert got == _oracle_counts(_oracle(landed)), label
+
+
+def _jobs_of_call(spark, source, lake: str, group: str) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, source, lake, AS_OF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_spark_job_count(spark, days_pdf, tmp_path):
+    """Guard on the fixed cost of a call, in Spark jobs. Before silver was
+    built once and counts came from the write jobs, a full load into an
+    empty lake launched 42 jobs and a one-day delta onto it 51, on this
+    fixture as on the benchmark's 5k-row lake (``local[4]``); now 14 and
+    29. Of the delta's 29, the three dims take 18: a schema read, a count
+    of the existing rows and a left-anti load each."""
+    base, delta = _split_last_day(days_pdf)
+    lake = str(tmp_path / "lake")
+    full = _jobs_of_call(spark, spark.createDataFrame(base), lake, "jobs-full-load")
+    one_day = _jobs_of_call(spark, spark.createDataFrame(delta), lake, "jobs-one-day-delta")
+    assert full <= 14
+    assert one_day <= 29
 
 
 def test_compaction_reduces_file_count(spark, tmp_path):
