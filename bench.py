@@ -507,8 +507,8 @@ def _episode_remeasure(
 
 def _quiet_ref(worst3: dict[str, float]) -> dict | None:
     """The latest committed quiet-machine record (BENCH_LOCAL_r{N}.json,
-    written by tools/round_close.py): its headline total + its walls
-    for THIS run's worst3 queries. Emitted in both output records so a
+    committed by the retired round process): its headline total + its
+    walls for THIS run's worst3 queries. Emitted in both output records so a
     judge can read hot-vs-quiet from BENCH_r{N}.json alone (VERDICT
     r11 item 3 — driver runs can carry machine-episode walls, and a
     naive round-over-round diff of driver records shows phantom
@@ -685,9 +685,9 @@ def _baseline() -> tuple[int, dict[str, float]] | None:
     the internal ``best`` candidate carries extra ranking elements
     that are dropped before returning.
 
-    A committed BENCH_LOCAL record (tools/round_close.py's full
-    quiet-machine record) outranks the driver record for the same
-    round: the driver record can carry machine-episode walls (r10:
+    A committed BENCH_LOCAL record (the full quiet-machine record
+    committed by the retired round process) outranks the driver record
+    for the same round: the driver record can carry machine-episode walls (r10:
     kmeans 11.8 s vs 2.95 s quiet), and comparing a new run against
     episode numbers hides genuine >2x regressions — and genuine
     episodes (r11 cycle 1 went unflagged against r10's episode
@@ -768,7 +768,7 @@ _SLOPE_DRIFT_BAR = 1.12
 
 def _baseline_slopes() -> tuple[int, dict[str, list[float]]] | None:
     """Latest committed (round, {spot: scaleup_band}) record. Prefers
-    the full BENCH_LOCAL_r{N}.json written by tools/round_close.py;
+    the full BENCH_LOCAL_r{N}.json committed by the retired round process;
     falls back to a driver BENCH_r{N}.json whose parsed compact line
     carries sf1_scaleup bands."""
     here = os.path.dirname(os.path.abspath(__file__))

@@ -2,235 +2,51 @@
 
 Importing this module populates ``REGISTRY`` (each domain module registers
 its queries at import time). ``__spark_entry__.py`` delegates here.
+Registry order is import order: the modules in ``_MODULES`` order, each
+module's queries in the order it registers them.
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Module import order only populates REGISTRY; the effective driver-
-# check order is set by _reorder_registry() below (never-driver-checked
-# queries first, see _driver_green/_reorder_registry below).
 import flights_etl_pipeline_spark.plans.queries_text  # noqa: F401
-
-try:  # keep entry green even if one module fails to import
-    import flights_etl_pipeline_spark.plans.queries_dedup  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_simsearch  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_multimodal  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_streaming  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_incremental  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_ml  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_graph  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_profile  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_synth  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_tpch  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_core  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_arrays  # noqa: F401
-except ImportError:
-    pass
-try:
-    import flights_etl_pipeline_spark.plans.queries_events  # noqa: F401
-except ImportError:
-    pass
-
 from flights_etl_pipeline_spark.plans.registry import REGISTRY
 
-_FPRINT_FILE = "QUERY_FPRINTS.json"
-
-# Fingerprint formula version. v1 hashed only the query function's
-# source, so an ORACLE-ONLY edit kept stale driver-green evidence
-# ranked valid (round 11's events_funnel_latency CAST fix needed a
-# manual --mark-stale). v2 folds the oracle SQL and the check mode
-# (hash-checked vs rows-only) into the hash, so any oracle edit
-# auto-voids the snapshot. Bumping this voids every stored snapshot;
-# tools/update_fingerprints.py restamps them at round open (the one
-# window where current tree == driver-verified tree).
-_FP_VERSION = 2
-
-
-def _repo_root() -> str:
-    import os
-
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-
-def _source_fingerprint(spec) -> str:
-    """md5 of the query's verification surface — the rewrite detector
-    (VERDICT r7 item 1; formula v2 per VERDICT r11 item 2). The hash
-    covers (a) the query function's source text, (b) the oracle SQL
-    (or an explicit rows-only marker when ``oracle is None``), so BOTH
-    a Spark-side rewrite and an oracle-side edit void stored evidence.
-    Helper-only rewrites are still not captured —
-    tools/update_fingerprints.py --mark-stale covers those manually.
-    """
-    import hashlib
-    import inspect
-
+# Domain modules in contract order. Each registers its queries at import
+# time; a module that fails to import is skipped so entry() stays green.
+_MODULES = (
+    "queries_text",
+    "queries_dedup",
+    "queries_simsearch",
+    "queries_multimodal",
+    "queries_streaming",
+    "queries_incremental",
+    "queries_ml",
+    "queries_graph",
+    "queries_profile",
+    "queries_synth",
+    "queries_tpch",
+    "queries_core",
+    "queries_arrays",
+    "queries_events",
+)
+for _name in _MODULES[1:]:
     try:
-        src = inspect.getsource(spec.fn)
-    except (OSError, TypeError):
-        return "nosource"
-    oracle = spec.oracle if spec.oracle is not None else "<rows-only-check>"
-    return hashlib.md5(
-        src.encode() + b"\x00" + oracle.encode()
-    ).hexdigest()
+        importlib.import_module(f"flights_etl_pipeline_spark.plans.{_name}")
+    except ImportError:
+        pass
 
-
-def _stored_fingerprints() -> dict[str, dict]:
-    """QUERY_FPRINTS.json: query name -> {"fp": md5-at-last-driver-green,
-    "round": latest green round when snapshotted}. Written at round open
-    by tools/update_fingerprints.py (before any code edits, so the
-    snapshot matches the code the driver actually verified). Missing or
-    unreadable -> {} (every green query then counts as rewritten, which
-    only affects sampling order, never which queries exist)."""
-    import json
-    import os
-
-    path = os.path.join(_repo_root(), _FPRINT_FILE)
-    try:
-        with open(path) as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    return data if isinstance(data, dict) else {}
-
-
-def _driver_green(latest: bool = False) -> dict[str, int]:
-    """Query name -> earliest round with a green driver row (or the
-    LATEST green round when ``latest=True`` — used by
-    tools/update_fingerprints.py to decide whether new evidence
-    supersedes a stored fingerprint), derived
-    directly from the CORRECTNESS_r*.json files the driver writes at
-    the repo root (green = hash_match true, or — for oracle-less
-    queries where the driver records err='no_oracle' — a rows-only run
-    that produced rows). Replaces the hand-kept _DRIVER_CHECKED /
-    _R*_PRIORITY lists (VERDICT r5 item 4: zero hand-kept driver
-    state; r5 item 2: the never-green set IS the priority window).
-
-    Missing/unreadable files degrade to "never checked", which only
-    affects sampling ORDER, never which queries exist.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    repo = _repo_root()
-    earliest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            ok = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and (row.get("spark_rows") or 0) > 0
-            )
-            if ok and (
-                name not in earliest
-                or (rnd > earliest[name] if latest else rnd < earliest[name])
-            ):
-                earliest[name] = rnd
-    return earliest
-
-
-def _rewritten(green: dict[str, int]) -> set[str]:
-    """Green queries whose verification surface changed since their
-    last driver-green row: the current fingerprint (fn source + oracle
-    SQL + check mode, see _source_fingerprint) differs from the
-    fingerprint stored in QUERY_FPRINTS.json at the time of that green
-    (VERDICT r7 item 1 — their evidence predates the rewrite, so it is
-    void for sampling purposes and they must re-enter the queue)."""
-    stored = _stored_fingerprints()
-    out = set()
-    for n in green:
-        if n not in REGISTRY:
-            continue
-        rec = stored.get(n)
-        if not rec or rec.get("fp") != _source_fingerprint(REGISTRY[n]):
-            out.add(n)
-    return out
-
-
-def _reorder_registry() -> None:
-    """Front-load queries that still need a (valid) driver-green row.
-
-    Tiers, derived from CORRECTNESS_r*.json via _driver_green() plus
-    the committed fingerprint snapshot (QUERY_FPRINTS.json):
-    (1) never-green queries with a hash-checkable oracle,
-    (2) green-but-rewritten-since oracle-backed queries (source
-        fingerprint no longer matches the at-last-green snapshot —
-        their evidence is void),
-    (3) never-green rows-only queries,
-    (4) green-but-rewritten rows-only queries,
-    (5) still-valid green queries ordered oldest evidence first
-        (earliest green round, then registry order), so the driver's
-        leftover ~50-query budget re-verifies the stalest rows instead
-        of re-hitting last round's sample.
-    """
-    green = _driver_green()
-    rewritten = _rewritten(green)
-    reg_pos = {n: i for i, n in enumerate(REGISTRY)}
-    fresh = [n for n in REGISTRY if n not in green]
-    fresh_hash = [n for n in fresh if REGISTRY[n].oracle is not None]
-    fresh_rows = [n for n in fresh if REGISTRY[n].oracle is None]
-    rew = sorted((n for n in rewritten), key=lambda n: reg_pos[n])
-    rew_hash = [n for n in rew if REGISTRY[n].oracle is not None]
-    rew_rows = [n for n in rew if REGISTRY[n].oracle is None]
-    checked = sorted(
-        (n for n in REGISTRY if n in green and n not in rewritten),
-        key=lambda n: (green[n], reg_pos[n]),
-    )
-    tiers = fresh_hash + rew_hash + fresh_rows + rew_rows + checked
-    ordered = {n: REGISTRY[n] for n in tiers}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder_registry()
+# A caller may import a domain module before this one, so insertion order
+# alone would depend on import history. Sort by module (stably, so each
+# module keeps its registration order) to fix the contract order.
+_RANK = {f"flights_etl_pipeline_spark.plans.{m}": i for i, m in enumerate(_MODULES)}
+_ordered = sorted(REGISTRY.items(), key=lambda kv: _RANK[kv[1].fn.__module__])
+REGISTRY.clear()
+REGISTRY.update(_ordered)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

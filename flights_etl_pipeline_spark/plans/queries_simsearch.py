@@ -3211,6 +3211,11 @@ def ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hstar").isNull() | (F.col("ham") <= F.col("hstar")))
         .select("qid", "vec_id", "ham")
     )
+    # The broadcast is bounded only in probability. Per query the
+    # survivors are every vector with ham <= hstar, so when many vectors
+    # tie at hstar the set exceeds _CSC_HAM; at worst (all tied, or no
+    # hstar because the corpus is smaller than _CSC_HAM) it is every
+    # vector, _CSC_Q x corpus rows in total.
     cand0 = F.broadcast(cand0).join(
         emb.select("vec_id", "embedding"), "vec_id"
     )

@@ -22,9 +22,9 @@ STATIC_MAP = [
     ("S4 partitioned parquet append", "year/month/day hive layout", "sources/sinks.py::write_partitioned_parquet", "tests/test_pipeline_e2e.py, tests/test_plans.py::test_partition_pruning"),
     ("S5 saveAsTable sink", "Hive external tables", "sources/sinks.py::save_as_table", "tests/test_pipeline_e2e.py + tests/test_hive_warehouse.py (real Derby metastore)"),
     ("S6 CSV ingest", "5-hour pandas loop", "sources/readers.py::read_csv_table (one distributed read)", "tests/test_pipeline_e2e.py + tests/test_formats.py (ORC/JSON/CSV round-trips)"),
-    ("S7 path probe", "py4j FileSystem.exists", "sources/readers.py::path_exists", "tests/test_pipeline_e2e.py"),
-    ("S8 filesystem DDL", "hdfs mkdir -p", "sources/sinks.py::mkdirs", "tests/test_pipeline_e2e.py"),
-    ("S9 catalog DDL", "CREATE DATABASE", "sources/sinks.py::ensure_database", "tests/test_pipeline_e2e.py"),
+    ("S7 path probe", "py4j FileSystem.exists", "sources/readers.py::path_exists", "tests/test_fs_helpers.py; tests/test_pipeline_e2e.py (via run_pipeline)"),
+    ("S8 filesystem DDL", "hdfs mkdir -p", "sources/sinks.py::mkdirs", "tests/test_fs_helpers.py"),
+    ("S9 catalog DDL", "CREATE DATABASE", "sources/sinks.py::ensure_database", "tests/test_hive_warehouse.py, tests/test_bucketed_join.py"),
     ("S10 temp view + SQL", "createOrReplaceTempView", "plans/queries_core.py::sql_between_slice", "query `sql_between_slice`"),
     ("§2.2 projections / filters / scalars", None, None, None),
     ("P1-P3, P9-P10 derive/cast/trim/drop", "withColumn suite", "operators/silver.py::to_silver", "tests/test_pipeline_e2e.py"),
@@ -55,7 +55,7 @@ STATIC_MAP = [
     ("range join", "—", "plans/queries_events.py::events_range_join_pairs (time-bucketed equi-join)", "oracle-checked"),
     ("§2.7 SQL surface", None, None, None),
     ("Q1 SQL over temp view", "BETWEEN re-slice", "plans/queries_core.py::sql_between_slice", "query `sql_between_slice`"),
-    ("Q2 DDL", "HiveQL database create", "sources/sinks.py::ensure_database", "e2e"),
+    ("Q2 DDL", "HiveQL database create", "sources/sinks.py::ensure_database", "tests/test_hive_warehouse.py, tests/test_bucketed_join.py"),
     ("§2.8 UDF surface", None, None, None),
     ("U1 duration parser", "Python UDF (intent)", "functions/scalar.py::duration_to_minutes (native) + pandas_udf variant", "query `duration_agg`, property tests"),
     ("U2 ISO-8601 -> timestamp", "broken UDF, builtin intent (D3)", "functions/scalar.py::iso_to_timestamp", "query `ts_segments`"),
@@ -150,8 +150,8 @@ def main() -> None:
         "(non-SQL-expressible), `bench` = in the sf0.1 headline set.",
         "`Driver` = rounds whose CORRECTNESS_r*.json recorded this query",
         "green (hash_match, or rows_match for the oracle-less); blank =",
-        "awaiting its rotation slot (the driver samples ~50 per round; the",
-        "local parity gate covers every query each round).",
+        "no driver record (the local parity gate, tools/check_parity.py,",
+        "covers every query).",
         f"Driver-green so far: {n_green}/{len(REGISTRY)}.",
         "",
         "| Query | Check | Bench | Driver | Survey tags |",
