@@ -28,7 +28,6 @@ from flights_etl_pipeline_spark.plans.registry import (
     load,
     model_channel,
     register,
-    result_checkpoint,
 )
 from flights_etl_pipeline_spark.plans.sqlfrag import sql_davg as _sql_davg
 from flights_etl_pipeline_spark.plans.sqlfrag import sql_dround as _sql_dround
@@ -1900,7 +1899,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_RULES_TOPK)
         # k-row result; eager checkpoint lets the basket cache release
         # instead of leaking across harness calls
-        .transform(result_checkpoint)
+        .localCheckpoint()
     )
     baskets.unpersist()
     return out

@@ -23,11 +23,7 @@ from pyspark.sql import functions as F
 
 from flights_etl_pipeline_spark.functions.scalar import dround
 from flights_etl_pipeline_spark.functions.text import minhash_params
-from flights_etl_pipeline_spark.plans.registry import (
-    load,
-    register,
-    result_checkpoint,
-)
+from flights_etl_pipeline_spark.plans.registry import load, register
 from flights_etl_pipeline_spark.plans.sqlfrag import sql_dround
 
 N_ITER = 10
@@ -260,7 +256,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg.agg(F.count(F.lit(1)).alias("n_nodes"))
         .crossJoin(edges.agg(F.count(F.lit(1)).alias("n_edges")))
         .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_triangles")))
-        .transform(result_checkpoint)
+        .localCheckpoint()
     )
     edges.unpersist()
     oriented.unpersist()
@@ -565,7 +561,7 @@ def copurchase_linkpred_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_common") > 0)
         .orderBy(F.col("jaccard").desc(), "cust_a", "cust_b")
         .limit(_LINKPRED_TOPK)
-        .transform(result_checkpoint)
+        .localCheckpoint()
     )
     sig.unpersist()
     return out
@@ -944,10 +940,10 @@ _KCORE_MAX_ROUNDS = 12
 def _kcore_round(edges: DataFrame) -> DataFrame:
     """One LAZY synchronous peel round: keep edges whose BOTH endpoints
     currently have degree >= K (two map-combinable degree aggregates +
-    two semi-joins on the edge keys, O(|E|)). Shared by the
-    convergence loop (which checkpoints each round) and the EXPLAINS
-    plan audit — the loop-body checkpoint otherwise hides the round
-    plan behind Scan ExistingRDD (VERDICT r9 item 7)."""
+    two semi-joins on the edge keys, O(|E|)). The convergence loop
+    checkpoints each round; the plan lint (tests/test_plans.py) reads
+    each round's executed plan, not the Scan ExistingRDD stub the
+    checkpoint leaves on the returned frame."""
     cd = edges.groupBy("c").agg(F.count(F.lit(1)).alias("dc"))
     sd = edges.groupBy("s").agg(F.count(F.lit(1)).alias("ds"))
     keep_c = cd.filter(F.col("dc") >= _KCORE_K).select("c")

@@ -39,7 +39,6 @@ from flights_etl_pipeline_spark.plans.registry import (
     load,
     model_channel,
     register,
-    result_checkpoint,
 )
 from flights_etl_pipeline_spark.plans.sqlfrag import sql_dround, sql_dsum
 
@@ -2265,7 +2264,7 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(FLOOR(1000.0D * sk / sc) AS LONG) "
             "AS kept_chunk_ratio_milli",
         )
-        .transform(result_checkpoint)
+        .localCheckpoint()
     )
     bcounts.unpersist()
     return out
@@ -4289,7 +4288,7 @@ def naive_bayes_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .groupBy("true_lang", F.col("lang").alias("pred_lang"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .transform(result_checkpoint)  # lang^2-sized; releases toks
+        .localCheckpoint()  # lang^2-sized; releases toks
     )
     toks.unpersist()
     return out

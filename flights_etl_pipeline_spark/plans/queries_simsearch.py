@@ -38,7 +38,6 @@ from flights_etl_pipeline_spark.plans.registry import (
     model_channel,
     rebalance,
     register,
-    result_checkpoint,
 )
 from flights_etl_pipeline_spark.plans.sqlfrag import sql_cosine, sql_decimal_dot
 
@@ -2635,10 +2634,11 @@ def _mmr_candidates(emb: DataFrame) -> DataFrame:
     """LAZY candidate-pool plan for the MMR rerank: score every corpus
     vector against the broadcast query (exact cosine via the decimal
     fold) and keep the top-M as a TakeOrdered — the corpus-sized half
-    of the serve path. Shared by ann_mmr_rerank (which collects it
-    through model_channel) and the EXPLAINS plan audit (the query's own
-    returned DF is driver-assembled selection output, so its explain
-    shows only Scan ExistingRDD; this is the real distributed tree)."""
+    of the serve path. ann_mmr_rerank collects it through
+    model_channel; its own returned DF is driver-assembled selection
+    output (explain shows only Scan ExistingRDD), so the plan lint
+    (tests/test_plans.py) sees this tree as the collect's executed
+    plan."""
     q = (
         emb.filter(F.col("vec_id") == 0)
         .select(F.col("embedding").alias("qv"))
@@ -2978,7 +2978,7 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "rank", "vec_id", "ham", "cosine")
     )
     # k x Q rows: eager checkpoint releases the mask-table cache
-    out = result_checkpoint(out)
+    out = out.localCheckpoint()
     mt.unpersist()
     return out
 
@@ -3297,7 +3297,7 @@ def ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # k x Q rows: eager checkpoint releases the mask-table cache
     # (the pagerank/tfidf discipline)
-    out = result_checkpoint(out)
+    out = out.localCheckpoint()
     mt.unpersist()
     return out
 

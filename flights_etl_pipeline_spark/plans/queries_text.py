@@ -21,11 +21,7 @@ from flights_etl_pipeline_spark.functions.text import (
     stopword_score,
     tokenize,
 )
-from flights_etl_pipeline_spark.plans.registry import (
-    load,
-    register,
-    result_checkpoint,
-)
+from flights_etl_pipeline_spark.plans.registry import load, register
 
 # ---------------------------------------------------------------------------
 # Document stats: token counts, lengths, fingerprint
@@ -2553,7 +2549,7 @@ def tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # k-row result: materialize eagerly so the postings cache releases
     # here instead of leaking across invocations (pagerank discipline).
-    out = result_checkpoint(out)
+    out = out.localCheckpoint()
     post.unpersist()
     return out
 

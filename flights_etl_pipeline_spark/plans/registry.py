@@ -12,7 +12,6 @@ import time; ``plans.queries`` imports them all and exposes the dict.
 
 from __future__ import annotations
 
-import contextlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -41,54 +40,6 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-# --- plan-audit mode (VERDICT r8 item 2) -----------------------------------
-#
-# Several queries end with ``result.localCheckpoint()`` so a persisted
-# intermediate (signature table, basket cache) can be released before
-# return without the consumer recomputing it. Correct at run time — but
-# a checkpoint truncates lineage, so ``explain`` on the returned DF shows
-# only ``Scan ExistingRDD``: EXPLAINS.md lost the real banded-join plans
-# and tests/test_plans.py's repo-wide lint walked a stub. Under plan-audit
-# mode, ``result_checkpoint`` is the identity: the query returns its full
-# LAZY plan (nothing executes — the paired unpersist on a never-
-# materialized cache is a no-op), so plan generation and linting see the
-# actual operator tree. Only audit tooling may enter this mode; the
-# driver/bench/parity paths always take the real checkpoint.
-
-_PLAN_AUDIT = False
-
-
-def plan_audit_active() -> bool:
-    return _PLAN_AUDIT
-
-
-@contextlib.contextmanager
-def plan_audit_mode():
-    """Context manager for EXPLAINS generation / plan linting: makes
-    :func:`result_checkpoint` the identity so checkpoint-returning
-    queries expose their pre-checkpoint lazy plan."""
-    global _PLAN_AUDIT
-    prev = _PLAN_AUDIT
-    _PLAN_AUDIT = True
-    try:
-        yield
-    finally:
-        _PLAN_AUDIT = prev
-
-
-def result_checkpoint(df: DataFrame) -> DataFrame:
-    """Eagerly ``localCheckpoint`` a RESULT DataFrame (the
-    materialize-then-release-cache pattern), except under plan-audit
-    mode, where the lazy plan passes through untouched.
-
-    Use ONLY for final-return materialization whose sole job is letting
-    a persisted intermediate go; loop-body checkpoints (iterative
-    convergence state) must stay literal ``localCheckpoint`` calls —
-    they are load-bearing for execution, not just for cache hygiene."""
-    if _PLAN_AUDIT:
-        return df
-    return df.localCheckpoint()
 
 
 def rebalance(df: DataFrame) -> DataFrame:

@@ -13,9 +13,11 @@ as session defaults instead:
   deterministic across driver hosts.
 - Arrow execution is on for the Pandas-UDF surface (the designated slow
   path; everything hot stays JVM-side).
-- ``spark.sql.shuffle.partitions`` defaults to 32 to match the local[32]
-  harness; on a real cluster set it to 2-3x total cores (AQE coalesces
-  down, it cannot split a too-coarse shuffle).
+- ``spark.sql.shuffle.partitions`` defaults to 32 (``SPARK_GRAFT_SHUFFLE``
+  overrides it), a width picked for a 32-core host. perfbench runs
+  ``local[nproc]`` with that default; the test session pins 8. On a real
+  cluster set it to 2-3x total cores (AQE coalesces down, it cannot
+  split a too-coarse shuffle).
 """
 
 from __future__ import annotations

@@ -1,9 +1,10 @@
 """AQE partition coalescing: runtime right-sizing of shuffle width.
 
-spark.sql.shuffle.partitions is a static guess (32 here); at 100 TB the
-same job runs with thousands. AQE replaces the guess with runtime
-sizes — a small aggregate must NOT come back as 32 near-empty
-partitions (each would be a task + a file on write)."""
+spark.sql.shuffle.partitions is a static guess (the test session pins
+8; the session default is 32); at 100 TB the same job runs with
+thousands. AQE replaces the guess with runtime sizes — a small aggregate
+must NOT come back as that many near-empty partitions (each would be a
+task + a file on write)."""
 
 from __future__ import annotations
 
