@@ -248,7 +248,9 @@ def _jobs_of_call(spark, source, lake: str, group: str) -> int:
     try:
         run_pipeline(spark, source, lake, AS_OF)
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        # clears the group's description too, which would otherwise
+        # name every later job on this thread
+        sc._jsc.clearJobGroup()
     # job-start events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))

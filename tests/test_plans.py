@@ -44,10 +44,6 @@ def executed_plans(spark):
 
     prev_mode = spark.conf.get("spark.sql.ui.explainMode")
     spark.conf.set("spark.sql.ui.explainMode", "simple")
-    # a job description left set on this thread would replace each
-    # execution's own ("localCheckpoint at ...")
-    prev_desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(None)
     out: list[tuple[str, str]] = []
     try:
         mark = last_id()
@@ -61,7 +57,6 @@ def executed_plans(spark):
             out.append((e.get().description(), initial if sep else plan))
     finally:
         spark.conf.set("spark.sql.ui.explainMode", prev_mode)
-        sc.setJobDescription(prev_desc)
 
 
 def last_checkpoint_plan(spark, fn):
