@@ -260,17 +260,6 @@ def parse_ppm(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     return w, h, np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
 
 
-def ppm_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas ingest stage: doc_id -> real PPM container bytes."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": pdf["doc_id"].map(lambda d: synth_ppm(int(d))),
-            }
-        )
-
-
 def decode_ppm_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas decode stage: parse each PPM container and compute
     integer-exact features from the DECODED raster (never from the

@@ -13,7 +13,7 @@ float16).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flights_etl_pipeline_spark.functions.arrays import (
@@ -48,9 +48,10 @@ def to_silver(bronze: DataFrame) -> DataFrame:
     segments arrays, raw segment columns dropped."""
     df = (
         bronze
-        # P2: string -> date
-        .withColumn("searchDate", F.to_date("searchDate", "yyyy-MM-dd"))
-        .withColumn("flightDate", F.to_date("flightDate", "yyyy-MM-dd"))
+        # P2: string -> date; a malformed date is NULL, as it was under
+        # the reference's non-ANSI Spark 2.4
+        .withColumn("searchDate", F.try_to_date("searchDate", "yyyy-MM-dd"))
+        .withColumn("flightDate", F.try_to_date("flightDate", "yyyy-MM-dd"))
         # P3: trim code columns
         .withColumn("startingAirport", F.trim("startingAirport"))
         .withColumn("destinationAirport", F.trim("destinationAirport"))
@@ -80,7 +81,7 @@ def to_silver(bronze: DataFrame) -> DataFrame:
     return df.drop(*seg_cols)
 
 
-def with_partition_cols(df: DataFrame, date_col: str = "searchDate") -> DataFrame:
+def with_partition_cols(df: DataFrame, date_col: Column | str = "searchDate") -> DataFrame:
     """P1: derive year/month/day partition columns
     (ingestToBronze.py:79-81)."""
     return (

@@ -78,10 +78,11 @@ def run_bronze(spark: SparkSession, source: DataFrame, lake_root: str) -> int:
         wm, rows_before = high_watermark(read_parquet_table(spark, path), "index")
         if wm is not None:
             incoming = source.filter(F.col("index") > F.lit(int(wm)))
+    # the raw searchDate string lands as is; a malformed one gets NULL
+    # partition columns instead of failing the call under ANSI mode
     staged = silver.with_partition_cols(
-        incoming.withColumn("searchDate", F.to_date("searchDate", "yyyy-MM-dd")),
-        "searchDate",
-    ).withColumn("searchDate", F.col("searchDate").cast("string"))
+        incoming, F.try_to_date("searchDate", "yyyy-MM-dd")
+    )
     return rows_before + _write(staged, path, DATE_PARTS, mode="append")
 
 

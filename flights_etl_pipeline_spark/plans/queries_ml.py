@@ -3863,8 +3863,6 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Split-conformal prediction intervals (distribution-free coverage)
 # ---------------------------------------------------------------------------
 
-_CONF_ALPHA = 0.1  # target 90% coverage
-
 _CONF_SPLIT_SQL = """
   SELECT o.o_orderkey AS k, c.c_mktsegment AS seg,
          CAST(o.o_totalprice AS DECIMAL(18,2)) AS price,

@@ -5,8 +5,8 @@ intended semantics (SURVEY.md section 2.10 -- intent, not the reference's
 bugs), never from the code under test. Also asserts idempotence: a second
 run with the same source must not change bronze (watermark) or the dims
 (left-anti incremental), that every ``PipelineResult`` count matches the
-lake and the oracle across full, delta, replayed and empty calls, and how
-many Spark jobs a call launches.
+lake and the oracle across full, delta, replayed and empty calls and on
+malformed dates, and how many Spark jobs a call launches.
 """
 
 from __future__ import annotations
@@ -45,8 +45,8 @@ def _oracle(raw_pdf) -> duckdb.DuckDBPyConnection:
         SELECT *,
                string_split(segmentsAirlineCode, '||') AS codes,
                string_split(segmentsAirlineName, '||') AS names,
-               CAST(searchDate AS DATE) AS searchD,
-               CAST(flightDate AS DATE) AS flightD
+               TRY_CAST(searchDate AS DATE) AS searchD,
+               TRY_CAST(flightDate AS DATE) AS flightD
         FROM raw
         WHERE baseFare <= totalFare AND seatsRemaining >= 0
         """
@@ -240,6 +240,23 @@ def test_counts_match_lake_and_oracle_across_calls(spark, days_pdf, tmp_path):
         on_lake = {k: spark.read.parquet(f"{lake}/{t}").count() for k, t in TABLES.items()}
         assert got == on_lake, label
         assert got == _oracle_counts(_oracle(landed)), label
+
+
+def test_malformed_dates_read_as_null(spark, tmp_path):
+    """A malformed ``searchDate`` or ``flightDate`` reads as NULL, as under
+    the reference's non-ANSI Spark 2.4, instead of failing the whole call
+    under Spark 4's ANSI default. Bronze lands the row under NULL
+    partitions and silver keeps it; gold and dim_date leave the NULL
+    date out. Every count equals a re-read and the oracle."""
+    pdf = make_flights(n=200, seed=3)
+    kept = pdf.index[(pdf.baseFare <= pdf.totalFare) & (pdf.seatsRemaining >= 0)]
+    pdf.loc[kept[0], "searchDate"] = "not-a-date"
+    pdf.loc[kept[1], "flightDate"] = "2022-13-45"
+    lake = str(tmp_path / "lake")
+    got = dataclasses.asdict(run_pipeline(spark, spark.createDataFrame(pdf), lake, AS_OF))
+    on_lake = {k: spark.read.parquet(f"{lake}/{t}").count() for k, t in TABLES.items()}
+    assert got == on_lake
+    assert got == _oracle_counts(_oracle(pdf))
 
 
 def _jobs_of_call(spark, source, lake: str, group: str) -> int:

@@ -11,6 +11,12 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
+# Importing plans.queries fills the FULL registry: REGISTRY fills as query
+# modules import, so a sweep over it would otherwise cover only whatever
+# earlier tests happened to import.
+import flights_etl_pipeline_spark.plans.queries  # noqa: F401
+from flights_etl_pipeline_spark.plans.registry import REGISTRY
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -276,41 +282,64 @@ def _lint_plan(name: str, plan: str) -> list[str]:
 
 _DATA_SOURCES = ("FileScan", "Scan parquet", "InMemoryRelation")
 
+# sf0.001's supplier table is too sparse for any |Δbal| < 10 pair to
+# exist (the band predicate is the point of the query, not its hit
+# rate); sf0.01 — the driver's correctness SF — yields 7 matched rows
+MAY_BE_EMPTY = {"acctbal_band_pairs"}
 
-def test_plan_lint_all_registered_queries(spark):
-    """One sweep, two repo-wide scale invariants, pinned so refactors
-    can't silently regress them:
 
-    1. No BatchEvalPython anywhere — row-at-a-time Python UDFs are the
-       forbidden slow path; ArrowEvalPython / MapInPandas /
-       FlatMapGroupsInPandas are the sanctioned Python surface.
-    2. No Sort/Window sitting on an Exchange SinglePartition unless the
-       query is in the sanctioned list above — a global window over
-       table-sized input is the classic funnel-everything-through-one-
-       task scale killer (the round-1 vocab_build defect). Final global
-       scalar aggregates (HashAggregate over SinglePartition) are fine:
-       their input is per-partition partials, not raw rows.
+def _plain_persisted_rdds(spark) -> dict[int, str]:
+    """The persistent RDDs that are not local checkpoints, by id: a
+    checkpoint RDD legitimately stays registered while it backs a
+    returned result, a plain persisted intermediate must not."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    rdds = {}
+    while it.hasNext():
+        rdd = it.next()._2()
+        if not rdd.isLocallyCheckpointed():
+            rdds[rdd.id()] = rdd.toString()
+    return rdds
 
-    Both are checked on the returned plan AND on the plan of every SQL
-    execution the query ran while being built: result and loop-body
-    checkpoints, model-channel collects. A checkpoint-backed result
-    shows only ``Scan ExistingRDD``; the work behind it is in those
-    executed plans.
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_registered_query(spark, name):
+    """One pass per registered query at sf0.001: build it, explain the
+    returned plan, collect it, then check
+
+    - it has columns, and rows unless it is in ``MAY_BE_EMPTY``;
+    - the two repo-wide scale invariants of ``_lint_plan``, on the
+      returned plan AND on the plan of every SQL execution the query ran:
+      result and loop-body checkpoints, model-channel collects and the
+      collect itself. A checkpoint-backed result shows only ``Scan
+      ExistingRDD``; the work behind it is in those executed plans.
+
+      1. No BatchEvalPython anywhere — row-at-a-time Python UDFs are the
+         forbidden slow path; ArrowEvalPython / MapInPandas /
+         FlatMapGroupsInPandas are the sanctioned Python surface.
+      2. No Sort/Window sitting on an Exchange SinglePartition unless
+         the query is in the sanctioned list above — a global window
+         over table-sized input is the classic funnel-everything-
+         through-one-task scale killer (the round-1 vocab_build defect).
+         Final global scalar aggregates (HashAggregate over
+         SinglePartition) are fine: their input is per-partition
+         partials, not raw rows.
+    - no plain persisted intermediate outlives the query: a leaked cache
+      accumulates across the driver's one-session correctness sweep and
+      eventually evicts working memory.
     """
-    # Populate the FULL registry first: REGISTRY fills as query modules
-    # import, so without this the sweep silently lints only whatever
-    # earlier tests happened to import (it missed tokenizer_apply for a
-    # round because queries_text wasn't loaded yet in single-file runs).
-    import flights_etl_pipeline_spark.plans.queries  # noqa: F401
+    spark.catalog.clearCache()
+    persisted_before = _plain_persisted_rdds(spark)
+    with executed_plans(spark) as ran:
+        df = REGISTRY[name].fn(spark, SF_DIR)
+        plan = plan_str(df, mode="simple")
+        rows = df.collect()
 
-    from flights_etl_pipeline_spark.plans.registry import REGISTRY
+    assert df.columns, name
+    if name not in MAY_BE_EMPTY:
+        assert rows, f"{name} returned 0 rows at sf0.001"
 
     violations = []
-    for name, spec in REGISTRY.items():
-        if name.startswith(_STREAMING_PREFIXES):  # execute on call
-            continue
-        with executed_plans(spark) as ran:
-            plan = plan_str(spec.fn(spark, SF_DIR), mode="simple")
+    if not name.startswith(_STREAMING_PREFIXES):  # they execute on call
         for p in [plan] + [p for _, p in ran]:
             violations += _lint_plan(name, p)
         # non-vacuity: a stub result (checkpoint-backed or assembled on
@@ -322,6 +351,12 @@ def test_plan_lint_all_registered_queries(spark):
         if stub and not any(src in p for _, p in ran for src in _DATA_SOURCES):
             violations.append(f"{name}: no executed plan read a data source")
     assert not violations, "\n".join(violations)
+
+    leaked = [
+        rdd for i, rdd in _plain_persisted_rdds(spark).items()
+        if i not in persisted_before
+    ]
+    assert not leaked, f"{name} left cached intermediates: {leaked}"
 
 
 def test_partition_pruning_on_hive_layout(spark, tmp_path):
