@@ -1,49 +1,27 @@
-"""Cache-lifetime hygiene: queries that persist() intermediates must not
-leak cached blocks past their own execution.
-
-A leaked cache accumulates across the driver's 150-query correctness
-sweep (one shared session) and eventually evicts working memory; review
-flagged exactly this class in round 1. Every persisting query runs here
-at sf0.001 and the persistent-RDD map must be empty afterwards.
+"""The queries that persist() intermediates must not leak cached blocks
+past their own execution. ``test_queries_smoke`` leak-checks every
+registered query; these are named here so a leak in one that persists
+on purpose reads as such. Each query runs once per session
+(``run_registered_query``), whichever test asks first.
 """
 
 from __future__ import annotations
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.test_plans import run_registered_query
 
-# every registered query whose implementation calls .persist()
 _PERSISTING = [
-    "association_rules",
-    "minhash_lsh_pairs",
-    "ngram_jaccard_pairs",
-    "fuzzy_customer_pairs",
-    "dedup_recall_eval",
-    "copurchase_pagerank",
-    "copurchase_triangles",
-    "copurchase_bfs_levels",
-    "copurchase_linkpred_lsh",
-    "dedup_clusters",
-    "kmeans_embeddings",
+    "association_rules", "minhash_lsh_pairs", "ngram_jaccard_pairs",
+    "fuzzy_customer_pairs", "dedup_recall_eval", "copurchase_pagerank",
+    "copurchase_triangles", "copurchase_bfs_levels",
+    "copurchase_linkpred_lsh", "dedup_clusters", "kmeans_embeddings",
 ]
 
 
 @pytest.mark.parametrize("name", _PERSISTING)
 def test_no_cached_blocks_leak(spark, name):
-    from flights_etl_pipeline_spark.plans import queries as q
-    from flights_etl_pipeline_spark.plans.registry import REGISTRY
-
-    spark.catalog.clearCache()
-    REGISTRY[name].fn(spark, SF_DIR).collect()
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    leaked = []
-    while it.hasNext():
-        rdd = it.next()._2()
-        # localCheckpoint RDDs legitimately stay registered -- they BACK
-        # the returned result (k-row outputs); what must not survive is
-        # a plain persisted intermediate
-        if not rdd.isLocallyCheckpointed():
-            leaked.append(rdd.toString())
+    # localCheckpoint RDDs legitimately stay registered -- they BACK the
+    # returned result; a plain persisted intermediate must not survive
+    _, leaked = run_registered_query(spark, name)
     assert not leaked, f"{name} left cached intermediates: {leaked}"

@@ -154,11 +154,3 @@ def test_driver_green_names_exist_in_registry():
     assert green, "no CORRECTNESS_r*.json records found"
     unknown = sorted(green - set(queries()) - _ENV_GATED)
     assert not unknown, f"driver-graded queries absent from the registry: {unknown}"
-
-
-def test_entry_contract(spark):
-    import __spark_entry__ as e
-
-    df = e.entry(spark)
-    assert len(df.columns) >= 2
-    assert df.count() > 0

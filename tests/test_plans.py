@@ -282,11 +282,6 @@ def _lint_plan(name: str, plan: str) -> list[str]:
 
 _DATA_SOURCES = ("FileScan", "Scan parquet", "InMemoryRelation")
 
-# sf0.001's supplier table is too sparse for any |Δbal| < 10 pair to
-# exist (the band predicate is the point of the query, not its hit
-# rate); sf0.01 — the driver's correctness SF — yields 7 matched rows
-MAY_BE_EMPTY = {"acctbal_band_pairs"}
-
 
 def _plain_persisted_rdds(spark) -> dict[int, str]:
     """The persistent RDDs that are not local checkpoints, by id: a
@@ -301,32 +296,42 @@ def _plain_persisted_rdds(spark) -> dict[int, str]:
     return rdds
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_registered_query(spark, name):
-    """One pass per registered query at sf0.001: build it, explain the
-    returned plan, collect it, then check
+# sf0.001's supplier table is too sparse for any |Δbal| < 10 pair to
+# exist (the band predicate is the point of the query, not its hit
+# rate); sf0.01 — the driver's correctness SF — yields 7 matched rows
+MAY_BE_EMPTY = {"acctbal_band_pairs"}
 
-    - it has columns, and rows unless it is in ``MAY_BE_EMPTY``;
-    - the two repo-wide scale invariants of ``_lint_plan``, on the
-      returned plan AND on the plan of every SQL execution the query ran:
-      result and loop-body checkpoints, model-channel collects and the
-      collect itself. A checkpoint-backed result shows only ``Scan
-      ExistingRDD``; the work behind it is in those executed plans.
+_RUNS: dict[str, tuple[list[str], list[str]]] = {}
 
-      1. No BatchEvalPython anywhere — row-at-a-time Python UDFs are the
-         forbidden slow path; ArrowEvalPython / MapInPandas /
-         FlatMapGroupsInPandas are the sanctioned Python surface.
-      2. No Sort/Window sitting on an Exchange SinglePartition unless
-         the query is in the sanctioned list above — a global window
-         over table-sized input is the classic funnel-everything-
-         through-one-task scale killer (the round-1 vocab_build defect).
-         Final global scalar aggregates (HashAggregate over
-         SinglePartition) are fine: their input is per-partition
-         partials, not raw rows.
-    - no plain persisted intermediate outlives the query: a leaked cache
-      accumulates across the driver's one-session correctness sweep and
-      eventually evicts working memory.
+
+def run_registered_query(spark, name: str) -> tuple[list[str], list[str]]:
+    """Run a registered query at sf0.001, once per session, and return
+    ``(violations, leaked)``; a later caller gets the recorded result.
+
+    Inside ``executed_plans``: clear the cache and note the plain
+    persisted RDDs, build the query, explain the returned plan (simple),
+    ``collect()`` it. A violation is a missing schema, 0 rows (unless in
+    ``MAY_BE_EMPTY``), or a breach of the two repo-wide scale invariants
+    of ``_lint_plan`` on the returned plan OR on the plan of any SQL
+    execution the query ran: result and loop-body checkpoints,
+    model-channel collects and the collect itself. A checkpoint-backed
+    result shows only ``Scan ExistingRDD``; the work behind it is in
+    those executed plans.
+
+    1. No BatchEvalPython anywhere — row-at-a-time Python UDFs are the
+       forbidden slow path; ArrowEvalPython / MapInPandas /
+       FlatMapGroupsInPandas are the sanctioned Python surface.
+    2. No Sort/Window sitting on an Exchange SinglePartition unless the
+       query is in the sanctioned list above — a global window over
+       table-sized input is the classic funnel-everything-through-one-
+       task scale killer (the round-1 vocab_build defect). Final global
+       scalar aggregates (HashAggregate over SinglePartition) are fine:
+       their input is per-partition partials, not raw rows.
+
+    ``leaked`` lists the plain persisted RDDs the query left behind.
     """
+    if name in _RUNS:
+        return _RUNS[name]
     spark.catalog.clearCache()
     persisted_before = _plain_persisted_rdds(spark)
     with executed_plans(spark) as ran:
@@ -334,11 +339,9 @@ def test_registered_query(spark, name):
         plan = plan_str(df, mode="simple")
         rows = df.collect()
 
-    assert df.columns, name
-    if name not in MAY_BE_EMPTY:
-        assert rows, f"{name} returned 0 rows at sf0.001"
-
-    violations = []
+    violations = [] if df.columns else [f"{name}: no columns"]
+    if not rows and name not in MAY_BE_EMPTY:
+        violations.append(f"{name} returned 0 rows at sf0.001")
     if not name.startswith(_STREAMING_PREFIXES):  # they execute on call
         for p in [plan] + [p for _, p in ran]:
             violations += _lint_plan(name, p)
@@ -350,13 +353,13 @@ def test_registered_query(spark, name):
         )
         if stub and not any(src in p for _, p in ran for src in _DATA_SOURCES):
             violations.append(f"{name}: no executed plan read a data source")
-    assert not violations, "\n".join(violations)
 
     leaked = [
         rdd for i, rdd in _plain_persisted_rdds(spark).items()
         if i not in persisted_before
     ]
-    assert not leaked, f"{name} left cached intermediates: {leaked}"
+    _RUNS[name] = (violations, leaked)
+    return _RUNS[name]
 
 
 def test_partition_pruning_on_hive_layout(spark, tmp_path):

@@ -1,8 +1,10 @@
-"""Smoke: every registered query runs at sf0.001 and yields a stable schema.
+"""The one pass over the query registry: every registered query runs at
+sf0.001 with a schema and rows, passes the plan lint on every plan it
+executed, and leaves no cached intermediate behind (a leak accumulates
+across the driver's one-session correctness sweep).
 
 Full value-level verification against DuckDB lives in tools/check_parity.py
-(and the driver's own gate at sf0.01); these tests catch import errors,
-analysis exceptions, and empty results early.
+(and the driver's own gate at sf0.01).
 """
 
 from __future__ import annotations
@@ -11,21 +13,14 @@ import pytest
 
 from flights_etl_pipeline_spark.plans.queries import oracle_sql, queries
 from flights_etl_pipeline_spark.plans.registry import REGISTRY
-
-# queries where an empty result at the tiny sf0.001 scale is legitimate
-# sf0.001's supplier table is too sparse for any |Δbal| < 10 pair to
-# exist (the band predicate is the point of the query, not its hit
-# rate); sf0.01 — the driver's correctness SF — yields 7 matched rows
-MAY_BE_EMPTY: set[str] = {"acctbal_band_pairs"}
+from tests.test_plans import run_registered_query
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_runs(spark, sf_dir, name):
-    df = REGISTRY[name].fn(spark, sf_dir)
-    rows = df.collect()
-    assert df.columns, name
-    if name not in MAY_BE_EMPTY:
-        assert len(rows) > 0, f"{name} returned 0 rows at sf0.001"
+def test_query_runs(spark, name):
+    violations, leaked = run_registered_query(spark, name)
+    assert not violations, "\n".join(violations)
+    assert not leaked, f"{name} left cached intermediates: {leaked}"
 
 
 def test_oracle_keys_subset_of_queries():
