@@ -13,11 +13,10 @@ as session defaults instead:
   deterministic across driver hosts.
 - Arrow execution is on for the Pandas-UDF surface (the designated slow
   path; everything hot stays JVM-side).
-- ``spark.sql.shuffle.partitions`` defaults to 32 (``SPARK_GRAFT_SHUFFLE``
-  overrides it), a width picked for a 32-core host. perfbench runs
-  ``local[nproc]`` with that default; the test session pins 8. On a real
-  cluster set it to 2-3x total cores (AQE coalesces down, it cannot
-  split a too-coarse shuffle).
+- ``spark.sql.shuffle.partitions`` defaults to 32, a width picked for a
+  32-core host. perfbench runs ``local[nproc]`` with that default; the
+  test session pins 8. On a real cluster set it to 2-3x total cores
+  (AQE coalesces down, it cannot split a too-coarse shuffle).
 """
 
 from __future__ import annotations
@@ -26,29 +25,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def get_spark(
     app_name: str = "flights-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    warehouse_dir: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-sane defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
     ``local[*]``; on a real deployment pass the cluster master URL or let
-    spark-submit inject it.
+    spark-submit inject it. ``extra_conf`` entries override the defaults
+    below (a ``spark-submit --conf`` of the same key does not).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS)
-        )
 
     builder = (
         SparkSession.builder.master(master)
@@ -56,11 +48,8 @@ def get_spark(
         # local-mode JVM heap defaults to 1g regardless of host RAM; size
         # it for the host (effective only when this builder launches the
         # JVM -- a pre-existing session keeps its own setting)
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.driver.memory", "8g")
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -72,8 +61,6 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    if warehouse_dir:
-        builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 

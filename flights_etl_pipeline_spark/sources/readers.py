@@ -22,17 +22,12 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_csv_table(
-    spark: SparkSession, path: str, schema: StructType | None = None
+    spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame:
     """S6 rebuilt: one distributed CSV read replaces the reference's
-    chunked pandas->Postgres loop. Explicit schema avoids the
-    double-pass inference scan on a 30 GB file."""
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
+    chunked pandas->Postgres loop. The schema is required: inference
+    would scan a 30 GB file twice."""
+    return spark.read.option("header", "true").schema(schema).csv(path)
 
 
 def read_jdbc_partitioned(

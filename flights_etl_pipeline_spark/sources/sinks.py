@@ -17,20 +17,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+MAX_RECORDS_PER_FILE = 5_000_000
+
 
 def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = ("year", "month", "day"),
     mode: str = "append",
-    max_records_per_file: int = 5_000_000,
 ) -> None:
     """S4: hive-layout partitioned parquet write
     (ingestToBronze.py:84; transformToSilver.py:118); with no
     ``partition_cols``, a plain parquet directory."""
     (
         df.write.partitionBy(*partition_cols)
-        .option("maxRecordsPerFile", str(max_records_per_file))
+        .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
         .mode(mode)
         .parquet(path)
     )
@@ -112,7 +113,7 @@ def mkdirs(spark: SparkSession, path: str) -> bool:
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
-    target_records_per_file: int = 5_000_000,
+    target_records_per_file: int = MAX_RECORDS_PER_FILE,
 ) -> tuple[int, int]:
     """Small-file compaction for a parquet directory: rewrite the data
     into files of ~``target_records_per_file`` rows and atomically swap.

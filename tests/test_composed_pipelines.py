@@ -32,12 +32,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def shuffled_sf_dir(tmp_path_factory):
+def shuffled_sf_dir(spark, tmp_path_factory):
     """sf0.001 with documents rewritten re-partitioned and re-ordered:
     same rows, different file layout and row order."""
-    from flights_etl_pipeline_spark.session import get_spark
-
-    spark = get_spark("tests", shuffle_partitions=8)
     out = str(tmp_path_factory.mktemp("shuffled_sf"))
     for t in (
         "region nation customer supplier part orders lineitem events "
